@@ -49,7 +49,7 @@ def main() -> None:
             mode_async = label.startswith("async")
             lake = LakeTable.create(
                 os.path.join(work, f"lake_{label}"), num_buckets=16,
-                mode="mor", compact_every=compact_every,
+                compact_every=compact_every,
             )
             t0 = time.time()
             replay_batches(

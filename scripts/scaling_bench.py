@@ -201,7 +201,7 @@ parallelism levels in separate JVMs via the production launch path
   per-batch plan runs ≥ min(32, cores) parallel tasks (scan, dedup
   shuffle, bucketed write; see BENCH/PLANS.md), and driver-side work
   per batch is O(num_buckets) manifest metadata — parquet-footer stats
-  + JSON write, measured ~50 ms (scripts/profile_apply.py).
+  + JSON write, measured ~50 ms.
 - input: {n_events:,} change events × ~{content_len} B payloads
   (deterministic fixture, seed 42, zipf hot-repo skew: top repo ~20%
   of events), 64-bucket lake, maxFilesPerTrigger={os.environ.get("SCALING_MFPT", "16")},

@@ -47,7 +47,7 @@ def main() -> None:
         )
         ev = spark.read.parquet(os.path.join(work, "events", "*.parquet"))
         lake = LakeTable.create(
-            os.path.join(work, "lake"), num_buckets=16, mode="mor"
+            os.path.join(work, "lake"), num_buckets=16
         )
         replay_batches(spark, lake, ev, num_chunks=4)
         lake.compact(spark, max_records_per_file=rows_per_file)

@@ -51,7 +51,7 @@ def main() -> None:
         lakes = {}
         for layout, zcols in (("lex", None), ("zorder", ["repo", "path"])):
             lake = LakeTable.create(
-                os.path.join(work, f"lake_{layout}"), num_buckets=16, mode="mor"
+                os.path.join(work, f"lake_{layout}"), num_buckets=16
             )
             replay_batches(spark, lake, ev, num_chunks=4)
             t0 = time.time()

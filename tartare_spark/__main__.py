@@ -47,7 +47,7 @@ def cmd_replay(args) -> int:
 
     spark = _spark(args)
     if args.create and not LakeTable.exists(args.lake):
-        lake = LakeTable.create(args.lake, num_buckets=args.buckets, mode=args.mode)
+        lake = LakeTable.create(args.lake, num_buckets=args.buckets)
     else:
         lake = LakeTable(args.lake)
     n_before = len(lake.metrics())
@@ -94,17 +94,20 @@ def cmd_replay_multi(args) -> int:
     from tartare_spark.streaming.runner import run_stream_multi
 
     spark = _spark(args)
-    tables = [t for t in args.tables.split(",") if t]
+    tables = [t.strip() for t in args.tables.split(",") if t.strip()]
     if not tables:
         print("replay-multi requires --tables t1,t2,...", file=sys.stderr)
         return 2
     lakes = {}
     for t in tables:
         root = os.path.join(args.lakes_root, t)
-        if args.create and not LakeTable.exists(root):
-            lakes[t] = LakeTable.create(root, num_buckets=args.buckets, mode=args.mode)
-        else:
+        if LakeTable.exists(root):
             lakes[t] = LakeTable(root)
+        elif args.create:
+            lakes[t] = LakeTable.create(root, num_buckets=args.buckets)
+        else:
+            print(f"no lake at {root}; pass --create", file=sys.stderr)
+            return 2
     registry = None
     if args.registry:
         with open(args.registry) as f:
@@ -278,7 +281,6 @@ def cmd_stats(args) -> int:
                 "version": lake.current_version(),
                 "oldest_version": lake.oldest_version(),
                 "batch_id": m["batch_id"],
-                "mode": lake.mode,
                 "num_buckets": lake.num_buckets,
                 "files": tot_files,
                 "raw_rows": tot_rows,
@@ -373,7 +375,7 @@ def cmd_bootstrap(args) -> int:
 
     spark = _spark(args)
     if args.create and not LakeTable.exists(args.lake):
-        lake = LakeTable.create(args.lake, num_buckets=args.buckets, mode=args.mode)
+        lake = LakeTable.create(args.lake, num_buckets=args.buckets)
     else:
         lake = LakeTable(args.lake)
     snap = spark.read.parquet(args.snapshot)
@@ -440,7 +442,6 @@ def build_parser() -> argparse.ArgumentParser:
     r.add_argument("--registry", help="JSON file of schema-registry rows")
     r.add_argument("--create", action="store_true", help="create the lake if absent")
     r.add_argument("--buckets", type=int, default=64)
-    r.add_argument("--mode", choices=["mor", "cow"], default="mor")
     r.add_argument("--max-files-per-trigger", type=int, default=16)
     r.add_argument("--fence", action="store_true", help="stateful applied-LSN fence (T5)")
     r.add_argument("--manifest-fence", action="store_true",
@@ -470,7 +471,6 @@ def build_parser() -> argparse.ArgumentParser:
     rm.add_argument("--registry", help="JSON file of schema-registry rows")
     rm.add_argument("--create", action="store_true", help="create absent lakes")
     rm.add_argument("--buckets", type=int, default=64)
-    rm.add_argument("--mode", choices=["mor", "cow"], default="mor")
     rm.add_argument("--max-files-per-trigger", type=int, default=16)
     rm.add_argument("--manifest-fence", action="store_true")
     rm.add_argument("--fence-lateness", type=int, default=0)
@@ -588,7 +588,6 @@ def build_parser() -> argparse.ArgumentParser:
     bs.add_argument("--lake", required=True)
     bs.add_argument("--create", action="store_true")
     bs.add_argument("--buckets", type=int, default=64)
-    bs.add_argument("--mode", choices=["mor", "cow"], default="mor")
     bs.add_argument("--batch-id", type=int, default=0)
     bs.add_argument("--snapshot-lsn", type=int, default=None,
                     help="log position of the snapshot (required when "

@@ -516,8 +516,8 @@ def p4_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j1_merge_full_outer(spark, sf_dir):
-    """Full-outer reconciliation (the MERGE core, production path in
-    operators/merge.py)."""
+    """Full-outer reconciliation (the MERGE core; the production path is
+    the merge-on-read LWW in ``LakeTable.read_raw``/``compact``)."""
     orders = (
         T(spark, sf_dir, "orders")
         .groupBy("o_custkey")

@@ -28,10 +28,12 @@ Semantics provided (Iceberg-equivalents):
   re-delivered batch (``batch_id <= last_batch_id``) is a no-op
   (SURVEY.md §2 S7; tartare analog: Environment.sequence +
   current_ntfs_id pointer swap [PK: tartare/core/models.py]);
-- **partition pruning** — MERGE reads only the buckets touched by the
-  incoming batch (SURVEY.md §2 J3);
-- **copy-on-write** — touched buckets are rewritten wholesale; untouched
-  buckets' files are carried forward by reference;
+- **partition pruning** — reads and folds touch only the buckets they
+  need (SURVEY.md §2 J3);
+- **merge-on-read** — each batch appends per-bucket delta files;
+  last-writer-wins is resolved at read time and ``compact`` folds a
+  bucket's deltas back into its base; untouched buckets' files are
+  carried forward by reference;
 - **schema evolution** — renames/adds are metadata-only: the
   physical column name never changes, ``SchemaRegistry`` maps names and
   backfills defaults at snapshot-read time (like Iceberg field-id based
@@ -96,9 +98,23 @@ class LakeTable:
         self.root = root
         with open(os.path.join(root, "_table.json")) as f:
             meta = json.load(f)
+        if meta.get("mode") != "mor":
+            # _table.json is outside input: a lake written by an older
+            # release in copy-on-write mode (also the default when no
+            # mode is recorded) has no delta files, so it would open
+            # cleanly and then serve an empty changes() feed
+            raise ValueError(
+                f"{root}: _table.json has mode {meta.get('mode')!r}; "
+                "copy-on-write lakes ('cow', the default when no mode is "
+                "recorded) are no longer supported — re-ingest into a new "
+                "lake (LakeTable.create(..., compact_every=1) folds after "
+                "every commit, the same shape)"
+            )
         self.num_buckets: int = meta["num_buckets"]
-        self.mode: str = meta.get("mode", "cow")
         self.compact_every: int = meta.get("compact_every", 8)
+        # set on branches by create_branch; apply_batch never auto-folds
+        # a branch (see fast_forward)
+        self.fork_version: int | None = meta.get("fork_version")
         # the CURRENT manifest is authoritative for the bucket layout
         # (rebucket() evolves it); _table.json only seeds creation.
         try:
@@ -126,30 +142,26 @@ class LakeTable:
     def create(
         root: str,
         num_buckets: int = 32,
-        mode: str = "mor",
         compact_every: int = 8,
     ) -> "LakeTable":
-        """``mode``:
+        """Create an empty merge-on-read table: each micro-batch APPENDS
+        its deduped upserts/tombstones as per-bucket delta files;
+        last-writer-wins is resolved at read; a bucket is folded back
+        into its base once it holds ``compact_every`` delta files. This
+        is the 10^10-event design: write amplification per batch is
+        O(batch), not O(table) (Hudi-MOR / Iceberg-equality-delete
+        shape).
 
-        - ``"mor"`` (merge-on-read, default) — each micro-batch APPENDS
-          its deduped upserts/tombstones as per-bucket delta files;
-          last-writer-wins is resolved at read; buckets are compacted
-          back into the base when a bucket accumulates
-          ``compact_every`` delta files. This is the 10^10-event design:
-          write amplification per batch is O(batch), not O(table)
-          (Hudi-MOR / Iceberg-equality-delete shape).
-        - ``"cow"`` (copy-on-write) — each batch full-outer-MERGEs into
-          the touched buckets and rewrites them. O(table) writes per
-          batch, but zero read-time resolution — right for read-heavy,
-          low-churn tables.
-        """
-        assert mode in ("mor", "cow")
+        ``compact_every=1`` folds every touched bucket right after each
+        commit, so readers never resolve deltas — the shape for
+        read-heavy, low-churn tables. The commit's delta files still
+        serve ``changes()``."""
         os.makedirs(os.path.join(root, "_manifests"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         os.makedirs(os.path.join(root, "_metrics"), exist_ok=True)
         _atomic_write_json(
             os.path.join(root, "_table.json"),
-            {"num_buckets": num_buckets, "mode": mode, "compact_every": compact_every},
+            {"num_buckets": num_buckets, "mode": "mor", "compact_every": compact_every},
         )
         manifest = {
             "version": 0,
@@ -268,11 +280,10 @@ class LakeTable:
             if e.name.startswith(".") or not e.is_dir():
                 continue
             if LakeTable.exists(e.path):
-                with open(os.path.join(e.path, "_table.json")) as f:
-                    meta = json.load(f)
+                br = LakeTable(e.path)
                 out[e.name] = {
-                    "fork_version": int(meta["fork_version"]),
-                    "current_version": LakeTable(e.path).current_version(),
+                    "fork_version": int(br.fork_version),
+                    "current_version": br.current_version(),
                 }
         return out
 
@@ -305,7 +316,6 @@ class LakeTable:
         LakeTable.create(
             tmp,
             num_buckets=int(m.get("num_buckets", self.num_buckets)),
-            mode=self.mode,
             compact_every=self.compact_every,
         )
         fork = dict(m)
@@ -371,14 +381,16 @@ class LakeTable:
         Returns the new main version. The branch is left alive (re-audit
         or drop is the caller's call).
 
-        Change-feed caveat: do not ``compact`` a MOR branch before
-        fast-forwarding — the fold moves staged rows from delta files
-        (which the incremental feed reads) into base files (which it
-        skips), so those commits would vanish from ``changes()`` across
-        the publish. Compact on main after the fast-forward instead."""
+        Change-feed integrity: the published manifest carries every
+        staged delta file, so ``changes()`` across the publish returns
+        every staged commit's rows. ``apply_batch`` never auto-folds a
+        branch for this reason (main folds the carried deltas on its
+        next commit); do not ``compact`` a branch by hand before
+        fast-forwarding either — the fold moves staged rows from delta
+        files (which the incremental feed reads) into base files (which
+        it skips), so those commits would vanish from ``changes()``."""
         br = self.branch(name)
-        with open(os.path.join(br.root, "_table.json")) as f:
-            fork_version = int(json.load(f)["fork_version"])
+        fork_version = int(br.fork_version)
         cur = self.current_version()
         if cur != fork_version:
             raise ConcurrentCommitError(
@@ -423,41 +435,6 @@ class LakeTable:
                 "branch_version": bm["version"],
             },
         }
-        # Change-feed integrity: the FF commit collapses EVERY branch
-        # commit since the fork into one main version, so its sidecar
-        # set must be the UNION of all staged commits' changelogs — the
-        # last commit's alone would silently truncate the CoW feed for
-        # consumers reading across the publish. If any non-maintenance
-        # staged commit predates sidecars, omit the key entirely: the
-        # CoW feed then takes its legacy snapshot-diff fallback, which
-        # is slow but complete. (MOR needs none of this — the FF
-        # manifest's delta set already carries every staged delta file;
-        # the one exception is a branch that COMPACTED its staged
-        # deltas, which folds them into base files the feed skips —
-        # compact on main after fast-forward, not on the branch.)
-        all_changelogs: list[str] = []
-        sidecars_complete = True
-        prev_batch = None
-        for bv in range(0, int(bm["version"]) + 1):
-            try:
-                bmv = br.manifest(bv)
-            except (ValueError, FileNotFoundError):
-                # branch expired its own history — the union cannot be
-                # proven complete; fall back to the diff path
-                sidecars_complete = False
-                break
-            if bv == 0:
-                prev_batch = bmv["batch_id"]
-                continue
-            if bmv["batch_id"] == prev_batch:
-                continue  # maintenance commit: no logical change
-            prev_batch = bmv["batch_id"]
-            if "changelog" not in bmv:
-                sidecars_complete = False
-                break
-            all_changelogs.extend(_migrate(p) for p in bmv["changelog"])
-        if sidecars_complete and all_changelogs:
-            manifest["changelog"] = sorted(all_changelogs)
         if bm.get("stats_cols"):
             manifest["stats_cols"] = bm["stats_cols"]
             manifest["file_stats"] = {
@@ -552,9 +529,9 @@ class LakeTable:
         with_bucket: bool = True,
     ) -> DataFrame:
         """Raw snapshot incl. tombstones & system columns, optionally
-        pruned to a bucket subset. In MOR mode this resolves base ∪
-        deltas to one row per key (last-writer-wins by ``_lsn``) — the
-        read-time half of merge-on-read.
+        pruned to a bucket subset. Resolves base ∪ deltas to one row
+        per key (last-writer-wins by ``_lsn``) — the read-time half of
+        merge-on-read.
 
         ``with_bucket=False`` skips recomputing the ``_bucket`` column
         for readers that don't need it (snapshot/lookup): the MOR dedup
@@ -658,62 +635,22 @@ class LakeTable:
         the physical rows committed in versions (from_version,
         to_version] — upserts AND tombstones, one row per key per
         commit, tagged with ``_commit_version``/``_batch_id`` so
-        downstream consumers can resume by version. In MOR mode each
-        commit's delta files contain exactly the deduped changed rows,
-        so this is a pure metadata-pruned file read — cost O(changed
-        rows), the table itself is never scanned. Maintenance commits
-        (compaction: batch_id unchanged from parent) rewrite state
-        without changing it and are skipped. In CoW mode each commit
-        records its deduped changes as SIDECAR files (the apply already
-        knows the staged keys, so this costs one extra O(batch) write at
-        commit time) and the feed reads only those — same O(changed
-        rows) cost as MOR. Redelivery caveat (both modes): under
-        unfenced redelivery a commit's recorded change set can include
-        stale rows (LSN at-or-below the already-applied row for that
-        key) that the merge discarded — consumers must apply the feed
-        LWW-by-``_lsn`` (as ``feed_as_changelog`` → ``apply_batch``
-        relays do); naive last-row-wins replay can regress on stale
-        rows. Only when a range contains legacy commits
-        written before sidecars does the feed fall back to a snapshot
-        diff (O(both snapshots), tombstones synthesized, all rows
-        attributed to to_version)."""
+        downstream consumers can resume by version. Each commit's delta
+        files contain exactly the deduped changed rows, so this is a
+        pure metadata-pruned file read — cost O(changed rows), the table
+        itself is never scanned, and a later fold does not hide them
+        (folds rewrite base files; retained manifests keep the delta
+        paths). Maintenance commits (compaction: batch_id unchanged from
+        parent) rewrite state without changing it and are skipped.
+        Redelivery caveat: under unfenced redelivery a commit's delta
+        can include stale rows (LSN at-or-below the already-applied row
+        for that key) that read-time LWW discards — consumers must apply
+        the feed LWW-by-``_lsn`` (as ``feed_as_changelog`` →
+        ``apply_batch`` relays do); naive last-row-wins replay can
+        regress on stale rows."""
         to_version = self.current_version() if to_version is None else to_version
         if not from_version <= to_version:
             raise ValueError(f"from_version {from_version} > to_version {to_version}")
-        if self.mode != "mor":
-            sidecar = self._changes_from_sidecars(spark, from_version, to_version)
-            if sidecar is not None:
-                return sidecar
-            # legacy fallback (commits predating changed-key sidecars):
-            # CoW rewrites whole buckets, so per-commit base files are
-            # not the change set; snapshot DIFF — O(both snapshots),
-            # correct, with synthesized tombstones. Rows are attributed
-            # to to_version (range attribution is lost in a diff); _lsn
-            # carries each row's real commit LSN.
-            new = self.read_raw(spark, version=to_version, with_bucket=False)
-            old = self.read_raw(spark, version=from_version, with_bucket=False)
-            live_new = new.filter(~F.col("_deleted"))
-            live_old = old.filter(~F.col("_deleted"))
-            upserts = live_new.exceptAll(live_old)
-            gone = live_old.join(
-                live_new.select("repo", "path"), ["repo", "path"], "left_anti"
-            )
-            tombstones = gone.select(
-                "repo",
-                "path",
-                "commit",
-                "lang",
-                F.lit(None).cast("string").alias("content"),
-                F.col("_lsn"),
-                F.lit(True).alias("_deleted"),
-                F.lit(None).cast("string").alias("_content_sha"),
-                F.col("_ts"),
-            )
-            return (
-                upserts.unionByName(tombstones)
-                .withColumn("_commit_version", F.lit(to_version))
-                .withColumn("_batch_id", F.lit(int(self.manifest(to_version)["batch_id"])))
-            )
         frames = []
         prev = self.manifest(from_version)
         # carry the seen-file set forward incrementally: rebuilding it
@@ -761,42 +698,6 @@ class LakeTable:
             out = out.unionByName(f)
         return out
 
-    def _changes_from_sidecars(
-        self, spark: SparkSession, from_version: int, to_version: int
-    ) -> DataFrame | None:
-        """CoW O(changed-rows) feed: read each in-range commit's
-        changed-key sidecar files. Returns None when any non-maintenance
-        commit in the range predates sidecars (caller falls back to the
-        snapshot diff)."""
-        frames = []
-        prev_batch = self.manifest(from_version)["batch_id"]
-        for v in range(from_version + 1, to_version + 1):
-            m = self.manifest(v)
-            if m["batch_id"] == prev_batch:
-                continue  # maintenance commit: no logical change
-            prev_batch = m["batch_id"]
-            if "changelog" not in m:
-                return None  # legacy commit — sidecars unavailable
-            if m["changelog"]:
-                frames.append(
-                    spark.read.parquet(*m["changelog"])
-                    .withColumn("_commit_version", F.lit(v))
-                    .withColumn("_batch_id", F.lit(int(m["batch_id"])))
-                )
-        if not frames:
-            from tartare_spark.lake.schema import RAW_LAKE_SCHEMA
-
-            return (
-                spark.createDataFrame([], RAW_LAKE_SCHEMA)
-                .drop("_bucket")
-                .withColumn("_commit_version", F.lit(0))
-                .withColumn("_batch_id", F.lit(0))
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-
     def stream_changes(self, spark: SparkSession) -> DataFrame:
         """The lake as a STREAMING source: tail the per-commit MOR delta
         files (``data/delta-*``) with Spark's file-stream source, so a
@@ -807,15 +708,13 @@ class LakeTable:
         another lake. Compaction output (``batch-*``) never matches the
         glob, so maintenance rewrites are invisible to consumers, and
         the file-stream checkpoint gives resume-exactly-once over the
-        feed. Requires mode='mor'.
+        feed.
 
         Retention interplay: ``expire_snapshots`` + ``vacuum`` reclaim
         delta files once no retained manifest references them — a
         consumer that lags behind the retention window loses those feed
         rows (the standard CDC-retention contract: size ``keep_last``
         to cover your slowest consumer)."""
-        if self.mode != "mor":
-            raise ValueError("stream_changes() requires merge-on-read mode")
         from tartare_spark.lake.schema import RAW_LAKE_SCHEMA
         from pyspark.sql.types import StructType
 
@@ -911,101 +810,6 @@ class LakeTable:
             f"commits on {self.root} — maintenance is publishing faster "
             "than the manifest can be re-read"
         )
-
-    def write_and_commit(
-        self,
-        merged: DataFrame,
-        batch_id: int,
-        touched_buckets: list[int],
-        bucket_lsn_updates: dict[int, int],
-        schema_version: int | None = None,
-        extra_stats: dict | None = None,
-        changelog_files: list[str] | None = None,
-    ) -> bool:
-        """Copy-on-write commit: write ``merged`` (already restricted to
-        ``touched_buckets``, carrying a ``_bucket`` column) as new files,
-        publish a new manifest carrying forward untouched buckets.
-
-        ``changelog_files`` (optional): per-commit changed-key sidecar
-        files (the batch's deduped physical rows, written by the caller)
-        recorded in the manifest so ``changes()`` can serve the CoW feed
-        in O(changed rows) instead of an O(both snapshots) diff.
-
-        Returns False (no-op) if ``batch_id`` was already applied.
-        """
-        if batch_id <= self.last_batch_id():
-            return False
-        self._assert_layout(self.manifest())
-
-        new_files = self._write_data_files(
-            merged, f"batch-{batch_id}-{uuid.uuid4().hex[:8]}", len(touched_buckets)
-        )
-
-        def _attempt():
-            prev = self.manifest()
-            files = dict(prev["files"])
-            deltas = dict(prev.get("deltas", {}))
-            for b in touched_buckets:
-                files[str(b)] = sorted(new_files.get(b, []))
-                # a base rewrite of a bucket supersedes its deltas (the
-                # CoW merge read them resolved via read_raw)
-                if str(b) in deltas:
-                    deltas[str(b)] = []
-            self._publish(
-                prev,
-                batch_id=batch_id,
-                files=files,
-                deltas=deltas,
-                bucket_lsn_updates=bucket_lsn_updates,
-                schema_version=schema_version,
-                extra_stats=extra_stats,
-                changelog=sorted(changelog_files) if changelog_files else None,
-            )
-
-        self._publish_writer_commit(_attempt)
-        return True
-
-    def commit_delta(
-        self,
-        staged_phys: DataFrame,
-        batch_id: int,
-        touched_buckets: list[int],
-        bucket_lsn_updates: dict[int, int],
-        schema_version: int | None = None,
-        extra_stats: dict | None = None,
-    ) -> bool:
-        """Merge-on-read commit: APPEND the batch's deduped physical rows
-        (one per key, tombstones included) as per-bucket delta files. No
-        existing file is read or rewritten — per-batch write cost is
-        O(batch), independent of table size. Idempotent by batch_id."""
-        if batch_id <= self.last_batch_id():
-            return False
-        self._assert_layout(self.manifest())
-
-        new_files = self._write_data_files(
-            staged_phys, f"delta-{batch_id}-{uuid.uuid4().hex[:8]}",
-            len(touched_buckets), blooms=False, codec="lz4",
-        )
-
-        def _attempt():
-            prev = self.manifest()
-            deltas = {k: list(v) for k, v in prev.get("deltas", {}).items()}
-            for b in touched_buckets:
-                deltas.setdefault(str(b), []).extend(
-                    sorted(new_files.get(b, []))
-                )
-            self._publish(
-                prev,
-                batch_id=batch_id,
-                files=dict(prev["files"]),
-                deltas=deltas,
-                bucket_lsn_updates=bucket_lsn_updates,
-                schema_version=schema_version,
-                extra_stats=extra_stats,
-            )
-
-        self._publish_writer_commit(_attempt)
-        return True
 
     def append_delta(
         self,
@@ -1584,7 +1388,6 @@ class LakeTable:
         schema_version: int | None,
         extra_stats: dict | None,
         replace_bucket_lsn: bool = False,
-        changelog: list[str] | None = None,
         stats_cols: list[str] | None = None,
     ) -> None:
         if replace_bucket_lsn:
@@ -1606,9 +1409,6 @@ class LakeTable:
             "bucket_lsn": bucket_lsn,
             "stats": {**(extra_stats or {})},
         }
-        if changelog is not None:
-            # THIS commit's changed-key sidecar files (not cumulative)
-            manifest["changelog"] = changelog
         # zone-map maintenance (Iceberg manifest-stats parity): once
         # ``analyze()`` has set ``stats_cols``, every commit carries
         # per-BASE-file min/max forward, drops entries for files no
@@ -1839,8 +1639,8 @@ class LakeTable:
     # maintenance
     # ------------------------------------------------------------------
     def _referenced_files(self) -> set[str]:
-        """All data files referenced by any RETAINED manifest — base,
-        delta, and changed-key sidecar (changelog) files."""
+        """All data files referenced by any RETAINED manifest — base and
+        delta files."""
         referenced: set[str] = set()
         for v in range(self.oldest_version(), self.current_version() + 1):
             m = self.manifest(v)
@@ -1848,7 +1648,6 @@ class LakeTable:
                 referenced.update(fl)
             for fl in m.get("deltas", {}).values():
                 referenced.update(fl)
-            referenced.update(m.get("changelog", []))
         return referenced
 
     def orphan_files(self) -> list[str]:

@@ -5,28 +5,28 @@ snapshot out:
 
 1. **A1 dedup** — max-LSN event per (repo, path) (map-side combined).
 2. **bucket (J3)** — compute each key's bucket (codegen'd hash).
-3. **apply** — MOR: ONE job (dedup shuffle → bucket-aligned delta
-   write); touched buckets + watermarks recovered from the parquet
-   footers of the just-written files (driver-side, ≤num_buckets files,
-   no second pass over data). CoW: small bucket-stats collect
-   (≤num_buckets rows) → full-outer MERGE vs touched buckets only →
-   rewrite (J1).
+3. **apply** — ONE job (bucket shuffle → exchange-free dedup →
+   bucket-aligned delta write); touched buckets + watermarks recovered
+   from the parquet footers of the just-written files (driver-side,
+   ≤num_buckets files, no second pass over data).
 4. **S5/S7 commit** — publish manifest atomically, keyed by batch_id
    (re-delivery = no-op).
 5. **lineage + T7 metrics** — per-bucket applied-LSN watermarks and a
    rows/sec JSONL record.
+6. **fold** — buckets whose delta chains reached ``compact_every`` are
+   compacted back into the base after the metrics record (the J1 MERGE
+   happens here and at read time: LWW-by-LSN over base ∪ deltas).
 
-Scale notes (the 100 TB story): in the default **merge-on-read** lake
-mode each batch shuffles (a) the batch once for dedup and (b) once more
-to co-locate buckets for the delta write — per-batch cost is O(batch),
-independent of table size; read-time LWW resolution is bounded by
-periodic compaction (every ``compact_every`` delta files per bucket).
-In **copy-on-write** mode step 3/4 full-outer-merge and rewrite the
-touched buckets instead (O(table) per batch, zero read-time work).
-The driver never sees data rows — only the ≤num_buckets touched-bucket
-ids and scalar counters. Skew: bucketing hashes the FULL key
-(repo, path), so a hot repo spreads over all buckets (salted bucketing,
-BASELINE.json:6); AQE skew-join splitting covers residual join skew.
+Scale notes (the 100 TB story): the lake is **merge-on-read**, so each
+batch shuffles once, to co-locate buckets for the delta write — per-batch
+cost is O(batch), independent of table size; read-time LWW resolution is
+bounded by periodic compaction (every ``compact_every`` delta files per
+bucket; ``compact_every=1`` folds after every commit and leaves readers
+no deltas to resolve). The driver never sees data rows — only the
+≤num_buckets touched-bucket ids and scalar counters. Skew: bucketing
+hashes the FULL key (repo, path), so a hot repo spreads over all buckets
+(salted bucketing, BASELINE.json:6); AQE skew-join splitting covers
+residual join skew.
 """
 
 from __future__ import annotations
@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 from tartare_spark.lake.table import LakeTable, bucket_expr
 from tartare_spark.operators.dedup import dedup_latest_lsn
-from tartare_spark.operators.merge import merge_upserts
 
 logger = logging.getLogger(__name__)
 
@@ -221,7 +220,6 @@ def apply_batch(
     lsn_fence: str | None = None,
     fence_lateness: int = 0,
     fence_order_check: bool = True,
-    cow_changelog: bool = True,
     compact_async: bool = False,
     expectations=None,
 ) -> dict:
@@ -241,14 +239,9 @@ def apply_batch(
     rebuilt per batch, so it always reflects the latest committed
     watermarks.
 
-    ``cow_changelog=False`` skips the CoW changed-key sidecar write
-    (an extra O(batch) write pass, zero extra exchanges); ``changes()``
-    then falls back to the snapshot-diff path for those commits.
-    Measured overhead is the per-batch constant of one extra write job
-    — +17% of a 4-chunk sf0.1 replay wall, shrinking as batch volume
-    grows (BENCH/BASELINE.md round-4 addenda) — the Delta-CDF trade:
-    pay at write time so the feed reads O(changed rows). No effect in
-    MOR mode, whose delta files double as the change feed.
+    A branch lake (``create_branch``) never auto-folds: its staged
+    delta files are the change feed ``fast_forward`` publishes to main,
+    and main folds them on its next commit.
     """
     t0 = time.time()
     if batch_id <= lake.last_batch_id():
@@ -325,151 +318,56 @@ def apply_batch(
 
     compact_worst: list[int] = []
     schema_fn = registry.current_version if registry else None
-    if lake.mode == "mor":
-        # merge-on-read: ONE Spark job AND ONE shuffle per batch. The
-        # bucket co-location exchange the delta write needs is issued
-        # FIRST; the dedup then groups by (_bucket, repo, path), and
-        # HashPartitioning([_bucket]) already satisfies that clustered
-        # distribution, so the aggregate runs exchange-free and the
-        # write inherits the per-bucket layout (asserted by
-        # tests/test_replay_batch.py::test_mor_apply_plan_has_single_shuffle).
-        # Touched buckets + per-bucket applied-LSN watermarks are
-        # recovered from the parquet footers of the files just written
-        # (driver-side, ≤num_buckets files) — no second pass, no collect.
-        ev_b = ev.withColumn("_bucket", bucket_expr(lake.num_buckets))
-        part = ev_b.repartition(max(lake.num_buckets, 1), "_bucket")
-        staged = dedup_latest_lsn(
-            part, keys=["_bucket", "repo", "path"], order_col="lsn"
-        )
-        phys = _phys_projection(staged)
-        res = lake.append_delta(
-            phys, batch_id=batch_id, schema_version_fn=schema_fn,
-            pre_partitioned=True,
-        )
-        # the delta write was the batch's action — the fence detector's
-        # and drop-only expectations' observe() metrics are collected
-        # now; evaluate post-write
-        fence_stats = _fence_order_stats(
-            lake, batch_id, fence_obs, fence_lateness
-        )
-        if expect_stats is not None and not isinstance(expect_stats, dict):
-            expect_stats = expect_stats.resolve()
-        committed = res is not None and res["keys"] > 0
-        n_keys = res["keys"] if res else 0
-        touched = res["touched_buckets"] if res else []
-        max_event_ts = res.get("max_event_ts") if res else None
-        if committed:
-            # incremental compaction: fold back ONLY the buckets whose
-            # delta chains crossed the threshold (not every delta'd
-            # bucket) — keeps maintenance O(hot buckets), not O(table).
-            # DEFERRED past the metrics record below: the batch that
-            # trips the threshold must not absorb the bucket-fold
-            # latency into its own commit latency (round-2 verdict).
-            m = lake.manifest()
-            compact_worst = [
-                int(b) for b, fl in m.get("deltas", {}).items()
-                if len(fl) >= lake.compact_every
-            ]
-    else:
-        # copy-on-write needs the touched-bucket set BEFORE reading the
-        # target (partition pruning), so staged feeds three jobs: a
-        # small bucket-stats collect (≤num_buckets rows —
-        # scale-independent), the changed-key sidecar write, and the
-        # MERGE rewrite. Like the MOR path, the ONE exchange is the
-        # up-front repartition by _bucket: the dedup groups by
-        # (_bucket, repo, path) exchange-free (HashPartitioning subset
-        # rule), the bucket-stats agg and the sidecar write inherit the
-        # bucket layout shuffle-free, and the merge join is co-located
-        # on _bucket (on_bucket=True) so the staged side enters the
-        # full-outer join without another exchange. persist() runs the
-        # shuffle once for all three consumers.
-        ev_b = ev.withColumn("_bucket", bucket_expr(lake.num_buckets))
-        part = ev_b.repartition(max(lake.num_buckets, 1), "_bucket")
-        staged = dedup_latest_lsn(
-            part, keys=["_bucket", "repo", "path"], order_col="lsn"
-        )
-        staged = staged.persist()
-        try:
-            bstats = (
-                staged.groupBy("_bucket")
-                .agg(
-                    F.max("lsn").alias("max_lsn"),
-                    F.count("*").alias("keys"),
-                    F.max("ts").alias("max_ts"),
-                )
-                .collect()
-            )
-            # the bucket-stats collect materialized the persisted staged
-            # batch (a full pass) — the fence detector's and drop-only
-            # expectations' observe() metrics are collected now;
-            # evaluate before the early return so an all-fenced batch
-            # still records the anomaly / counts
-            fence_stats = _fence_order_stats(
-                lake, batch_id, fence_obs, fence_lateness
-            )
-            if expect_stats is not None and not isinstance(expect_stats, dict):
-                expect_stats = expect_stats.resolve()
-            if not bstats:
-                rec = {"batch_id": batch_id, "skipped": False, "rows": 0,
-                       "empty": True, "seconds": time.time() - t0}
-                if fence_stats:
-                    rec.update(fence_stats)
-                if expect_stats:
-                    rec.update(expect_stats)
-                lake.append_metrics(rec)
-                return rec
-            touched = sorted(int(r["_bucket"]) for r in bstats)
-            bucket_lsn = {int(r["_bucket"]): int(r["max_lsn"]) for r in bstats}
-            n_keys = sum(int(r["keys"]) for r in bstats)
-            max_event_ts = max(
-                (r["max_ts"] for r in bstats if r["max_ts"] is not None),
-                default=None,
-            )
-            schema_version = schema_fn(max(bucket_lsn.values())) if schema_fn else None
-            # changed-key sidecar: the staged side is already deduped
-            # per key, so its physical projection is this commit's
-            # UPSERT SET — one extra O(batch) write that lets changes()
-            # serve the CoW feed without an O(both snapshots) diff.
-            # Redelivery caveat: under unfenced redelivery the staged
-            # batch can contain stale rows (LSN below the already-applied
-            # row) that the merge then discards, so the feed may carry
-            # rows that did not change table state — same semantics as
-            # the MOR delta feed; consumers must apply LWW-by-LSN (see
-            # LakeTable.changes docstring). (A crash before commit
-            # leaves the sidecar as an orphan for vacuum(), same as
-            # data files.)
-            import uuid as _uuid
-
-            sidecars = {} if not cow_changelog else lake._write_data_files(
-                _phys_projection(staged),
-                f"cdc-{batch_id}-{_uuid.uuid4().hex[:8]}",
-                len(touched),
-                pre_partitioned=True,
-                blooms=False,
-                codec="lz4",
-            )
-            target = lake.read_raw(spark, buckets=touched)
-            merged = merge_upserts(
-                target, staged, lake.num_buckets, on_bucket=True
-            )
-            committed = lake.write_and_commit(
-                merged,
-                batch_id=batch_id,
-                touched_buckets=touched,
-                bucket_lsn_updates=bucket_lsn,
-                schema_version=schema_version,
-                extra_stats={"keys": n_keys},
-                changelog_files=[f for fl in sidecars.values() for f in fl],
-            )
-        finally:
-            staged.unpersist()
+    # merge-on-read: ONE Spark job AND ONE shuffle per batch. The
+    # bucket co-location exchange the delta write needs is issued
+    # FIRST; the dedup then groups by (_bucket, repo, path), and
+    # HashPartitioning([_bucket]) already satisfies that clustered
+    # distribution, so the aggregate runs exchange-free and the
+    # write inherits the per-bucket layout (asserted by
+    # tests/test_replay_batch.py::test_mor_apply_plan_has_single_shuffle).
+    # Touched buckets + per-bucket applied-LSN watermarks are
+    # recovered from the parquet footers of the files just written
+    # (driver-side, ≤num_buckets files) — no second pass, no collect.
+    ev_b = ev.withColumn("_bucket", bucket_expr(lake.num_buckets))
+    part = ev_b.repartition(max(lake.num_buckets, 1), "_bucket")
+    staged = dedup_latest_lsn(
+        part, keys=["_bucket", "repo", "path"], order_col="lsn"
+    )
+    phys = _phys_projection(staged)
+    res = lake.append_delta(
+        phys, batch_id=batch_id, schema_version_fn=schema_fn,
+        pre_partitioned=True,
+    )
+    # the delta write was the batch's action — the fence detector's
+    # and drop-only expectations' observe() metrics are collected
+    # now; evaluate post-write
+    fence_stats = _fence_order_stats(
+        lake, batch_id, fence_obs, fence_lateness
+    )
+    if expect_stats is not None and not isinstance(expect_stats, dict):
+        expect_stats = expect_stats.resolve()
+    committed = res is not None and res["keys"] > 0
+    n_keys = res["keys"] if res else 0
+    touched = res["touched_buckets"] if res else []
+    max_event_ts = res.get("max_event_ts") if res else None
+    if committed and lake.fork_version is None:
+        # incremental compaction: fold back ONLY the buckets whose
+        # delta chains crossed the threshold (not every delta'd
+        # bucket) — keeps maintenance O(hot buckets), not O(table).
+        # DEFERRED past the metrics record below: the batch that
+        # trips the threshold must not absorb the bucket-fold
+        # latency into its own commit latency (round-2 verdict).
+        m = lake.manifest()
+        compact_worst = [
+            int(b) for b, fl in m.get("deltas", {}).items()
+            if len(fl) >= lake.compact_every
+        ]
     dt = time.time() - t0
     rec = {
         "batch_id": batch_id,
         # we got past the idempotency check, so this batch_id is NEW:
         # "skipped" is reserved for redelivered batches (early return
-        # above); a new-but-empty batch is marked "empty" instead,
-        # matching the CoW path's record shape.
+        # above); a new-but-empty batch is marked "empty" instead.
         "skipped": False,
         "empty": not committed,
         "rows": n_keys,
@@ -483,13 +381,8 @@ def apply_batch(
         # this batch (how far behind the log's head this commit is).
         # The fixture's synthetic timestamps make this large/negative in
         # tests; on a live tail it is the consumer-lag metric.
-        # Both provenances yield a correct epoch via .timestamp():
-        # footer stats (MOR) are tz-aware UTC (absolute), and collect()
-        # (CoW) naive datetimes are DRIVER-LOCAL wall time (PySpark's
-        # TimestampType.fromInternal uses datetime.fromtimestamp), which
-        # .timestamp() interprets as local — recovering the same epoch.
-        # Do NOT pin naive values to UTC: that double-shifts on a
-        # non-UTC driver.
+        # Footer stats are tz-aware UTC, so .timestamp() is the
+        # absolute epoch on any driver time zone.
         "max_event_ts": max_event_ts.isoformat() if max_event_ts else None,
         "lag_seconds": (
             round(time.time() - max_event_ts.timestamp(), 3)
@@ -676,11 +569,11 @@ def rebase_branch(
     user arbitration, for exactly the reason the LWW lake converges
     under redelivery.
 
-    Cost: O(staged rows) read (the branch feed is delta-file/sidecar
-    pruned — main is never diffed) + the normal apply cost per staged
-    commit. Driver work: one ≤num-staged-commits collect of version
-    ids. Same caveat as ``fast_forward``: do not compact a MOR branch
-    first (the fold moves staged rows out of the incremental feed).
+    Cost: O(staged rows) read (the branch feed is delta-file pruned —
+    main is never diffed) + the normal apply cost per staged commit.
+    Driver work: one ≤num-staged-commits collect of version ids. Same
+    caveat as ``fast_forward``: do not compact a branch first (the fold
+    moves staged rows out of the incremental feed).
 
     When main has NOT advanced, prefer ``fast_forward`` — it publishes
     by reference without rewriting any data. Returns the per-batch

@@ -1,105 +1,17 @@
-"""J1 ``merge_full_outer`` — the CDC MERGE resolution.
+"""S3 ``conditional_ingest`` — the pre-MERGE skip-unchanged filter.
 
-Reference analog: coverage export merges contributor exports with
-replace-or-add semantics [PK: tartare/core/calendar_handler.py,
-tartare/tasks.py coverage merge step]; BASELINE.json:6 re-expresses it
-as MERGE-style upserts (insert/update/delete) keyed by (repo, path).
-
-Resolution rule (pinned by tartare_spark.oracle and the referee tests):
-**last-writer-wins by LSN**. A staged change applies iff its lsn exceeds
-the target row's ``_lsn``; deletes become tombstones (``_deleted=true``)
-rather than physical removals so that an arbitrarily-late lower-LSN
-update can never resurrect a deleted row. ``update`` on an absent key
-upserts (replace-or-add).
-
-Plan shape: full-outer sort-merge join on the primary key, restricted to
-the buckets the batch touches (the caller prunes — SURVEY.md §2 J3).
-Both sides shuffle on (repo, path); AQE splits skewed partitions. The
-staged side has already been reduced to one row per key by A1, so the
-join input is bounded by |touched keys| + |touched-bucket lake rows|.
+The J1 MERGE resolution — last-writer-wins by LSN, pinned by
+tartare_spark.oracle and the referee tests — lives in the merge-on-read
+lake: ``LakeTable.read_raw`` resolves base ∪ deltas to one row per key
+at read time, and ``LakeTable.compact`` makes that durable. Deletes are tombstones (``_deleted=true``), not physical
+removals, so an arbitrarily-late lower-LSN update can never resurrect a
+deleted row.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from tartare_spark.lake.table import bucket_expr
-
-
-def merge_upserts(
-    target_raw: DataFrame, staged: DataFrame, num_buckets: int,
-    on_bucket: bool = False,
-) -> DataFrame:
-    """target_raw: physical lake rows (incl. tombstones) of the touched
-    buckets. staged: ONE change per key (post-A1), columns
-    lsn/op/repo/path/commit/lang/content. Returns the new physical rows
-    for the touched buckets (copy-on-write output, incl. tombstones).
-
-    ``on_bucket=True`` (both inputs must carry ``_bucket``) adds the
-    bucket to the join keys — a semantic no-op (``_bucket`` is a pure
-    function of the key), but it lets a staged side that is ALREADY
-    hash-partitioned by ``_bucket`` flow into the join exchange-free
-    (HashPartitioning on a subset of the join keys satisfies the
-    clustered distribution), and the output keeps the bucket without
-    recomputing the hash."""
-    t_cols = [
-        F.col("repo").alias("t_repo"),
-        F.col("path").alias("t_path"),
-        F.col("commit").alias("t_commit"),
-        F.col("lang").alias("t_lang"),
-        F.col("content").alias("t_content"),
-        F.col("_lsn").alias("t_lsn"),
-        F.col("_deleted").alias("t_deleted"),
-        F.col("_content_sha").alias("t_sha"),
-        F.col("_ts").alias("t_ts"),
-    ]
-    s_cols = [
-        F.col("repo").alias("s_repo"),
-        F.col("path").alias("s_path"),
-        F.col("commit").alias("s_commit"),
-        F.col("lang").alias("s_lang"),
-        F.col("content").alias("s_content"),
-        F.col("lsn").alias("s_lsn"),
-        F.col("op").alias("s_op"),
-        F.col("ts").alias("s_ts"),
-    ]
-    if on_bucket:
-        t_cols.append(F.col("_bucket").alias("t_bucket"))
-        s_cols.append(F.col("_bucket").alias("s_bucket"))
-    t = target_raw.select(*t_cols)
-    s = staged.select(*s_cols)
-    cond = (t["t_repo"] == s["s_repo"]) & (t["t_path"] == s["s_path"])
-    if on_bucket:
-        cond = (t["t_bucket"] == s["s_bucket"]) & cond
-    j = t.join(s, cond, "full_outer")
-    staged_wins = F.col("s_lsn").isNotNull() & (
-        F.col("t_lsn").isNull() | (F.col("s_lsn") > F.col("t_lsn"))
-    )
-    pick = lambda sc, tc: F.when(staged_wins, F.col(sc)).otherwise(F.col(tc))  # noqa: E731
-    out = j.select(
-        F.coalesce("s_repo", "t_repo").alias("repo"),
-        F.coalesce("s_path", "t_path").alias("path"),
-        pick("s_commit", "t_commit").alias("commit"),
-        pick("s_lang", "t_lang").alias("lang"),
-        pick("s_content", "t_content").alias("content"),
-        pick("s_lsn", "t_lsn").cast("long").alias("_lsn"),
-        F.when(staged_wins, F.col("s_op") == F.lit("delete"))
-        .otherwise(F.coalesce(F.col("t_deleted"), F.lit(False)))
-        .alias("_deleted"),
-        F.when(staged_wins, F.sha2(F.coalesce(F.col("s_content"), F.lit("")), 256))
-        .otherwise(F.col("t_sha"))
-        .alias("_content_sha"),
-        pick("s_ts", "t_ts").alias("_ts"),
-        *(
-            [F.coalesce("s_bucket", "t_bucket").cast("int").alias("_bucket")]
-            if on_bucket
-            else []
-        ),
-    )
-    if not on_bucket:
-        out = out.withColumn("_bucket", bucket_expr(num_buckets))
-    return out
 
 
 def conditional_filter(staged: DataFrame, target_raw: DataFrame) -> DataFrame:

@@ -18,7 +18,7 @@ deletes — and redelivered (already-applied) feed rows are harmless:
 they only re-mark a group dirty.
 
 Scale shape at 10^10 events: the feed read is O(changed rows) (delta
-files / CoW sidecars — the table is never scanned to find changes);
+files — the table is never scanned to find changes);
 dirty groups per refresh interval are ≪ total groups, collected only
 as a DISTINCT group-key list and broadcast to both the snapshot-side
 semi-join and the MV-side anti-join, so neither the lake nor the MV

@@ -29,6 +29,9 @@ from tartare_spark.lake.schema import CHANGE_EVENT_SCHEMA
 from tartare_spark.lake.table import LakeTable
 from tartare_spark.operators.apply import apply_batch
 
+# run_stream_multi's route value for events with no registered table
+_UNROUTED = "__unrouted__"
+
 
 def _open_change_source(
     spark: SparkSession,
@@ -267,6 +270,11 @@ def run_stream_multi(
     """
     if not lakes:
         raise ValueError("run_stream_multi: no lakes registered")
+    if _UNROUTED in lakes:
+        raise ValueError(
+            f"run_stream_multi: table name {_UNROUTED!r} is reserved for "
+            "unrouted events; register the table under another name"
+        )
     rcol = F.col(route) if isinstance(route, str) else route
     if isinstance(registry, dict):
         registries = dict(registry)
@@ -302,7 +310,7 @@ def run_stream_multi(
                 "_route",
                 F.when(
                     F.coalesce(rcol.isin(names), F.lit(False)), rcol
-                ).otherwise(F.lit("__unrouted__")),
+                ).otherwise(F.lit(_UNROUTED)),
             )
             counts = {
                 r["_route"]: r["n"]
@@ -310,9 +318,9 @@ def run_stream_multi(
                     F.count("*").alias("n")
                 ).collect()
             }
-            n_unrouted = counts.get("__unrouted__", 0)
+            n_unrouted = counts.get(_UNROUTED, 0)
             if n_unrouted:
-                unrouted = tagged.filter(F.col("_route") == "__unrouted__")
+                unrouted = tagged.filter(F.col("_route") == _UNROUTED)
                 if strict:
                     bad = [
                         r[0]

@@ -68,7 +68,7 @@ def test_cli_end_to_end(spark, unit_events_dir, tmp_path, capsys):
     rc = main(["stats", "--lake", lake_dir])
     stt = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rc == 0 and stt["files"] > 0 and stt["raw_rows"] > 0
-    assert stt["num_buckets"] == 16 and stt["mode"] == "mor"
+    assert stt["num_buckets"] == 16
 
     rc = main(["metrics", "--lake", lake_dir, "--tail", "5"])
     mets = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
@@ -243,7 +243,8 @@ def test_cli_replay_multi(spark, unit_events_dir, tmp_path, capsys):
             "replay-multi",
             "--events", f"{unit_events_dir}",
             "--lakes-root", str(tmp_path / "lakes"),
-            "--tables", ",".join(tables),
+            # spaces after the commas: --tables values are stripped
+            "--tables", ", ".join(tables),
             "--route", "repo",
             "--checkpoint", str(tmp_path / "ck"),
             "--create",
@@ -276,6 +277,19 @@ def test_cli_replay_multi(spark, unit_events_dir, tmp_path, capsys):
     )
     capsys.readouterr()
     assert rc == 2
+
+    # a table with no lake and no --create → usage error naming the root
+    rc = main(
+        [
+            "replay-multi",
+            "--events", f"{unit_events_dir}",
+            "--lakes-root", str(tmp_path / "lakes3"),
+            "--tables", "t1",
+            "--checkpoint", str(tmp_path / "ck3"),
+        ]
+    )
+    err = capsys.readouterr().err
+    assert rc == 2 and "no lake at" in err and "pass --create" in err
 
 
 def test_cli_verify_replica(spark, unit_events_dir, tmp_path, capsys):

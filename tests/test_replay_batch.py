@@ -46,9 +46,10 @@ def assert_state_equals_referee(spark, lake, registry=None, reg_rows=None):
     assert bad.count() == 0
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_batch_replay_matches_referee(spark, unit_events, tmp_path, mode):
-    lake = LakeTable.create(str(tmp_path / f"lake_{mode}"), num_buckets=16, mode=mode)
+@pytest.mark.parametrize("compact_every", [8, 1])
+def test_batch_replay_matches_referee(spark, unit_events, tmp_path, compact_every):
+    lake = LakeTable.create(str(tmp_path / f"lake_{compact_every}"), num_buckets=16,
+                            compact_every=compact_every)
     recs = replay_batches(spark, lake, unit_events, num_chunks=8)
     assert all(not r.get("skipped") for r in recs)
     assert_state_equals_referee(spark, lake)
@@ -59,7 +60,7 @@ def test_mor_compaction_preserves_state(spark, unit_events, tmp_path):
     changing the resolved state; compact_every=3 forces several
     compactions mid-replay too."""
     lake = LakeTable.create(
-        str(tmp_path / "lake_mor_c"), num_buckets=8, mode="mor", compact_every=3
+        str(tmp_path / "lake_mor_c"), num_buckets=8, compact_every=3
     )
     replay_batches(spark, lake, unit_events, num_chunks=9)
     assert any(m.get("compacted_buckets") for m in lake.metrics())
@@ -317,7 +318,8 @@ def test_concurrent_commit_guard(spark, unit_events, tmp_path):
 def test_expire_snapshots_bounds_history(spark, unit_events, tmp_path):
     """expire_snapshots bounds time travel + lets vacuum reclaim files
     referenced only by expired snapshots; the live state is untouched."""
-    lake = LakeTable.create(str(tmp_path / "lake"), num_buckets=8, mode="cow")
+    lake = LakeTable.create(str(tmp_path / "lake"), num_buckets=8,
+                            compact_every=1)
     replay_batches(spark, lake, unit_events, num_chunks=4)
     cur = lake.current_version()
     assert cur >= 4
@@ -334,8 +336,8 @@ def test_expire_snapshots_bounds_history(spark, unit_events, tmp_path):
     with pytest.raises(ValueError, match="expired"):
         lake.snapshot(spark, version=0)
 
-    # CoW rewrites leave old bucket files referenced ONLY by expired
-    # manifests; vacuum can now reclaim them
+    # folds leave old base (and folded delta) files referenced ONLY by
+    # expired manifests; vacuum can now reclaim them
     removed = lake.vacuum()
     assert removed > 0
     assert lake.snapshot(spark).count() == live_before
@@ -438,39 +440,28 @@ def _replay_feed_over_snapshot(spark, lake, feed, from_v, to_v):
     assert old == new
 
 
-def test_changes_cow_sidecars_and_diff_fallback(spark, unit_events, tmp_path):
-    """CoW change feed: served from per-commit changed-key SIDECAR files
-    (O(changed rows) — the feed's plan reads ONLY cdc-* files, never the
-    snapshots), replaying it over the old snapshot reconstructs the new
-    one; with a legacy (pre-sidecar) commit in range the feed falls back
-    to the snapshot diff and still reconstructs correctly."""
-    import json
+def test_changes_fold_every_commit_feed_survives_vacuum(spark, unit_events, tmp_path):
+    """Fold-every-commit change feed: every commit's buckets are folded
+    right away, yet the feed is still served from the commits' own
+    delta files (O(changed rows) — the feed's plan reads ONLY delta-*
+    files, never the folded bases), replaying it over the old snapshot
+    reconstructs the new one, and the deltas survive vacuum."""
     import os
 
-    lake = LakeTable.create(str(tmp_path / "lake"), num_buckets=8, mode="cow")
+    lake = LakeTable.create(str(tmp_path / "lake"), num_buckets=8,
+                            compact_every=1)
     replay_batches(spark, lake, unit_events, num_chunks=3)
     cur = lake.current_version()
+    assert lake.max_delta_files() == 0  # every commit was folded
 
     feed = lake.changes(spark, 1, cur)
     # the O(changed-rows) claim, asserted on the plan's actual inputs
     inputs = feed.inputFiles()
-    assert inputs and all(f"{os.sep}cdc-" in f for f in inputs), inputs[:3]
+    assert inputs and all(f"{os.sep}delta-" in f for f in inputs), inputs[:3]
     _replay_feed_over_snapshot(spark, lake, feed, 1, cur)
-    # sidecars survive vacuum (referenced by retained manifests)
+    # folded deltas survive vacuum (referenced by retained manifests)
     lake.vacuum()
     _replay_feed_over_snapshot(spark, lake, lake.changes(spark, 1, cur), 1, cur)
-
-    # strip one manifest's changelog → legacy fallback (snapshot diff)
-    mp = str(tmp_path / "lake" / "_manifests" / f"v{2:012d}.json")
-    with open(mp) as f:
-        m = json.load(f)
-    del m["changelog"]
-    with open(mp, "w") as f:
-        json.dump(m, f)
-    lake2 = LakeTable(str(tmp_path / "lake"))
-    feed2 = lake2.changes(spark, 1, cur)
-    assert any(f"{os.sep}batch-" in f for f in feed2.inputFiles())  # diff path
-    _replay_feed_over_snapshot(spark, lake2, feed2, 1, cur)
 
 
 def test_read_resolution_pruned_to_dirty_buckets(spark, unit_events, tmp_path):
@@ -639,7 +630,7 @@ def test_compact_concurrent_commit_not_lost(spark, unit_events, tmp_path):
     and its publish. The fold must lose the version claim, retry, keep
     the interleaved delta files in the manifest, and the final resolved
     state must equal a replay where no compaction ran at all."""
-    lake = LakeTable.create(str(tmp_path / "lake"), num_buckets=8, mode="mor")
+    lake = LakeTable.create(str(tmp_path / "lake"), num_buckets=8)
     lo, hi = unit_events.agg(F.min("lsn"), F.max("lsn")).first()
     mid = (int(lo) + int(hi)) // 2
     first, second = (
@@ -663,7 +654,7 @@ def test_compact_concurrent_commit_not_lost(spark, unit_events, tmp_path):
         "concurrent writer's deltas were dropped by the compaction publish"
     )
     # and the resolved state is the full two-batch replay
-    ref = LakeTable.create(str(tmp_path / "ref"), num_buckets=8, mode="mor")
+    ref = LakeTable.create(str(tmp_path / "ref"), num_buckets=8)
     apply_batch(spark, ref, first, batch_id=0)
     apply_batch(spark, ref, second, batch_id=1)
     a = lake.snapshot(spark).drop("_ts")
@@ -677,7 +668,7 @@ def test_async_compaction_replay_matches_referee(spark, unit_events, tmp_path):
     the next batches commit; after draining, state equals the referee
     and at least one async fold actually happened."""
     lake = LakeTable.create(
-        str(tmp_path / "lake_async"), num_buckets=8, mode="mor",
+        str(tmp_path / "lake_async"), num_buckets=8,
         compact_every=3,
     )
     replay_batches(spark, lake, unit_events, num_chunks=9, compact_async=True)
@@ -698,7 +689,7 @@ def test_writer_retries_past_maintenance_claim(
     post-fold manifest — not kill the stream with
     ConcurrentCommitError."""
     lake = LakeTable.create(
-        str(tmp_path / "lake"), num_buckets=8, mode="mor",
+        str(tmp_path / "lake"), num_buckets=8,
         compact_every=10_000,  # no automatic folds — we inject one
     )
     lo, hi = unit_events.agg(F.min("lsn"), F.max("lsn")).first()
@@ -728,7 +719,7 @@ def test_writer_retries_past_maintenance_claim(
     parent = lake.manifest(m["parent"])
     assert parent["stats"].get("compaction"), "fold commit missing from history"
     # and the state is the full two-batch replay
-    ref = LakeTable.create(str(tmp_path / "ref"), num_buckets=8, mode="mor")
+    ref = LakeTable.create(str(tmp_path / "ref"), num_buckets=8)
     apply_batch(spark, ref, first, batch_id=0)
     apply_batch(spark, ref, second, batch_id=1)
     a = lake.snapshot(spark).drop("_ts")
@@ -748,7 +739,7 @@ def test_writer_conflict_with_second_writer_stays_loud(
     from tartare_spark.lake.table import ConcurrentCommitError
 
     lake = LakeTable.create(
-        str(tmp_path / "lake"), num_buckets=8, mode="mor",
+        str(tmp_path / "lake"), num_buckets=8,
         compact_every=10_000,
     )
     lo, hi = unit_events.agg(F.min("lsn"), F.max("lsn")).first()
@@ -781,7 +772,7 @@ def test_vacuum_drains_inflight_fold(spark, unit_events, tmp_path):
     worker first, so the fold's commit lands and its files are
     referenced by the time the orphan sweep runs."""
     lake = LakeTable.create(
-        str(tmp_path / "lake"), num_buckets=8, mode="mor",
+        str(tmp_path / "lake"), num_buckets=8,
         compact_every=10_000,
     )
     replay_batches(spark, lake, unit_events, num_chunks=4)
@@ -801,7 +792,8 @@ def test_tags_pin_and_retain_snapshots(spark, unit_events, tmp_path):
     """Named tags (Iceberg ref parity): a tag pins a version for reads,
     RETAINS it through expire_snapshots, and protects its files from
     vacuum until dropped."""
-    lake = LakeTable.create(str(tmp_path / "lake_tags"), num_buckets=8, mode="cow")
+    lake = LakeTable.create(str(tmp_path / "lake_tags"), num_buckets=8,
+                            compact_every=1)
     replay_batches(spark, lake, unit_events, num_chunks=4)
     cur = lake.current_version()
     pinned = cur - 2
@@ -1079,10 +1071,11 @@ def test_bootstrap_refuses_op_column(spark, unit_events, tmp_path):
 
 
 def test_branch_ff_feed_spans_all_staged_commits(spark, unit_events, tmp_path):
-    """CoW write-audit-publish: the fast-forward commit's change feed
-    must carry EVERY staged commit's keys, not just the last one's."""
+    """Fold-every-commit write-audit-publish: the fast-forward commit's
+    change feed must carry EVERY staged commit's keys, not just the last
+    one's — so a branch must not auto-fold its staged deltas away."""
     lake = LakeTable.create(str(tmp_path / "lake_ffcl"), num_buckets=8,
-                            mode="cow")
+                            compact_every=1)
     first, rest = _split_events(unit_events)
     replay_batches(spark, lake, first, num_chunks=1)
     fork_v = lake.current_version()
@@ -1101,6 +1094,21 @@ def test_branch_ff_feed_spans_all_staged_commits(spark, unit_events, tmp_path):
         .select("repo", "path").collect()
     }
     assert feed_keys == staged_keys
+
+
+def test_open_rejects_copy_on_write_lake(tmp_path):
+    """Copy-on-write mode is gone: a _table.json from an older release
+    recording mode 'cow' — or no mode, the old default — fails loudly at
+    open instead of serving an empty change feed."""
+    import json
+    import os
+
+    root = LakeTable.create(str(tmp_path / "lake"), num_buckets=4).root
+    for meta in ({"num_buckets": 4, "mode": "cow"}, {"num_buckets": 4}):
+        with open(os.path.join(root, "_table.json"), "w") as f:
+            json.dump(meta, f)
+        with pytest.raises(ValueError, match="copy-on-write lakes"):
+            LakeTable(root)
 
 
 def test_half_created_branch_does_not_wedge_maintenance(spark, unit_events, tmp_path):

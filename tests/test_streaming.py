@@ -84,9 +84,11 @@ def test_streaming_rerun_same_checkpoint_noop(spark, unit_events_dir, tmp_path, 
 
 
 def test_streaming_cow_lake(spark, unit_events_dir, tmp_path, expected):
-    """The streaming runner against a copy-on-write lake (the read-heavy
-    mode) converges to the same referee state."""
-    lake = LakeTable.create(str(tmp_path / "lake_cow"), num_buckets=8, mode="cow")
+    """The streaming runner against a fold-every-commit lake (the
+    copy-on-write shape for read-heavy tables) converges to the same
+    referee state."""
+    lake = LakeTable.create(str(tmp_path / "lake_cow"), num_buckets=8,
+                            compact_every=1)
     reg = SchemaRegistry(registry_rows(UNIT))
     run_stream(
         spark, unit_events_dir, lake, str(tmp_path / "ckpt_cow"),
@@ -613,6 +615,10 @@ def test_multi_table_unrouted_strict_and_deadletter(
 
     with pytest.raises(ValueError, match="no lakes"):
         run_stream_multi(spark, unit_events_dir, {}, str(tmp_path / "ck0"))
+    # the unrouted sentinel is not a legal table name
+    sentinel = {"__unrouted__": LakeTable.create(str(tmp_path / "u"), num_buckets=8)}
+    with pytest.raises(ValueError, match="reserved"):
+        run_stream_multi(spark, unit_events_dir, sentinel, str(tmp_path / "ck_u"))
 
 
 # ---------------------------------------------------------------- T8
