@@ -39,3 +39,15 @@ RAW_LAKE_SCHEMA = StructType(
         StructField("_bucket", IntegerType(), True),
     ]
 )
+
+# what every lake data file holds: ``_bucket`` is the directory partition
+# of the write and is dropped from the files. ``_deleted`` tombstones keep
+# last-writer-wins correct under arbitrarily-late cross-batch events (a
+# delete must not "forget" its LSN, or a stale lower-LSN update would
+# resurrect the row). Writers cast every column to this schema and
+# readers pass it to every file read: the lake's physical schema never
+# changes (evolution is read-time, see ``SchemaRegistry``), and a read
+# without it launches a schema-inference job per call.
+PHYS_LAKE_SCHEMA = StructType(
+    [f for f in RAW_LAKE_SCHEMA.fields if f.name != "_bucket"]
+)

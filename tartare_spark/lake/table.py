@@ -64,23 +64,9 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-logger = logging.getLogger(__name__)
+from tartare_spark.lake.schema import PHYS_LAKE_SCHEMA
 
-# System columns stored physically in the lake (BASELINE.json:15 shape +
-# engine columns). ``_deleted`` tombstones keep last-writer-wins correct
-# under arbitrarily-late cross-batch events (a delete must not "forget"
-# its LSN, or a stale lower-LSN update would resurrect the row).
-LAKE_COLUMNS = [
-    "repo",
-    "path",
-    "commit",
-    "lang",
-    "content",
-    "_lsn",
-    "_deleted",
-    "_content_sha",
-    "_ts",  # event time of the applied version (drives per-batch lag)
-]
+logger = logging.getLogger(__name__)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -91,6 +77,76 @@ def bucket_expr(num_buckets: int):
     return F.pmod(F.xxhash64(F.col("repo"), F.col("path")), F.lit(num_buckets)).cast(
         "int"
     )
+
+
+def key_bucket(repo: str | None, path: str | None, num_buckets: int) -> int:
+    """``bucket_expr`` for one key, evaluated on the driver with no Spark
+    job. Spark's ``xxhash64`` chains XXH64 over each non-null column's
+    UTF-8 bytes, seeding with 42 and then with the previous column's
+    hash; ``pmod`` of the signed result is Python's ``%``."""
+    h = 42
+    for s in (repo, path):
+        if s is not None:
+            h = _xxh64(s.encode("utf-8"), h)
+    return (h - (1 << 64) if h >> 63 else h) % num_buckets
+
+
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 (unsigned), the algorithm of Spark's ``XXH64`` class."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j:i + 8 * j + 8], "little")
+                v[j] = _round(v[j], lane)
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        lane = int.from_bytes(data[i:i + 8], "little")
+        h = (_rotl(h ^ _round(0, lane), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        lane = int.from_bytes(data[i:i + 4], "little")
+        h = (_rotl(h ^ (lane * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h = _rotl(h ^ (byte * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def _read_files(spark: SparkSession, files: list[str]) -> DataFrame:
+    """The lake's one data-file reader. Every data file holds
+    ``PHYS_LAKE_SCHEMA``, so the read passes it: a parquet read without
+    a schema launches a schema-inference job on every call. No files
+    reads as an empty frame of the same schema."""
+    if not files:
+        return spark.createDataFrame([], PHYS_LAKE_SCHEMA)
+    return spark.read.schema(PHYS_LAKE_SCHEMA).parquet(*files)
 
 
 class LakeTable:
@@ -567,11 +623,6 @@ class LakeTable:
         dirty_files = self._files(dirty_want, manifest=m) + self._files(
             dirty_want, kind="deltas", manifest=m
         )
-        if not clean_files and not dirty_files:
-            from tartare_spark.lake.schema import RAW_LAKE_SCHEMA
-
-            df = spark.createDataFrame([], RAW_LAKE_SCHEMA)
-            return df if with_bucket else df.drop("_bucket")
         frames = []
         if dirty_files:
             from tartare_spark.operators.dedup import dedup_latest_lsn
@@ -582,13 +633,13 @@ class LakeTable:
             # over the DIRTY buckets' rows only.
             frames.append(
                 dedup_latest_lsn(
-                    spark.read.parquet(*dirty_files),
+                    _read_files(spark, dirty_files),
                     keys=["repo", "path"],
                     order_col="_lsn",
                 )
             )
-        if clean_files:
-            frames.append(spark.read.parquet(*clean_files))
+        if clean_files or not frames:
+            frames.append(_read_files(spark, clean_files))
         df = frames[0]
         for extra in frames[1:]:
             df = df.unionByName(extra)
@@ -680,16 +731,13 @@ class LakeTable:
             prev_batch = m["batch_id"]
             if new_files:
                 frames.append(
-                    spark.read.parquet(*new_files)
+                    _read_files(spark, new_files)
                     .withColumn("_commit_version", F.lit(v))
                     .withColumn("_batch_id", F.lit(int(m["batch_id"])))
                 )
         if not frames:
-            from tartare_spark.lake.schema import RAW_LAKE_SCHEMA
-
             return (
-                spark.createDataFrame([], RAW_LAKE_SCHEMA)
-                .drop("_bucket")
+                _read_files(spark, [])
                 .withColumn("_commit_version", F.lit(0))
                 .withColumn("_batch_id", F.lit(0))
             )
@@ -715,10 +763,6 @@ class LakeTable:
         consumer that lags behind the retention window loses those feed
         rows (the standard CDC-retention contract: size ``keep_last``
         to cover your slowest consumer)."""
-        from tartare_spark.lake.schema import RAW_LAKE_SCHEMA
-        from pyspark.sql.types import StructType
-
-        phys = StructType([f for f in RAW_LAKE_SCHEMA.fields if f.name != "_bucket"])
         # Glob all the way to leaf FILES: a directory glob would run
         # partition discovery per delta dir and reject the layout as
         # conflicting roots. ignoreMissingFiles lets a lagging consumer
@@ -729,7 +773,7 @@ class LakeTable:
         # match the glob: their rows are verbatim duplicates of the
         # redelivered batch, which the downstream LWW apply dedups.
         return (
-            spark.readStream.schema(phys)
+            spark.readStream.schema(PHYS_LAKE_SCHEMA)
             .option("ignoreMissingFiles", "true")
             .parquet(os.path.join(self.root, "data", "delta-*", "_bucket=*", "*.parquet"))
         )
@@ -738,23 +782,20 @@ class LakeTable:
         """Point lookup by primary key, pruned to the key's single
         bucket: reads 1/num_buckets of the table regardless of table
         size (the CDC workload's 'current content of (repo, path)'
-        query). The bucket id comes from evaluating the SAME hash
-        expression the writer uses on a literal 1-row frame (constant-
-        folded; no data scan). The layout (num_buckets) is taken from the
-        CURRENT manifest — not the instance cache — and the pruned read
-        is pinned to that same manifest version, so a stale LakeTable
+        query). The bucket id is computed on the driver by
+        ``key_bucket``, bit-identical to the writer's ``bucket_expr``, so
+        the only Spark jobs are the ones that read the bucket's files
+        (one for a clean bucket; the LWW dedup's two for a dirty one).
+        The layout (num_buckets) is taken from the CURRENT manifest —
+        not the instance cache — and the pruned read is pinned to that
+        same manifest version, so a stale LakeTable
         opened before a ``rebucket()`` still resolves the right bucket
         (and a rebucket racing between the two steps cannot skew it)."""
         m = self.manifest()
         layout = int(m.get("num_buckets", self.num_buckets))
-        b = (
-            spark.range(1)
-            .select(F.lit(repo).alias("repo"), F.lit(path).alias("path"))
-            .select(bucket_expr(layout).alias("b"))
-            .collect()[0]["b"]
-        )
+        b = key_bucket(repo, path, layout)
         return (
-            self.read_raw(spark, buckets=[int(b)], version=int(m["version"]),
+            self.read_raw(spark, buckets=[b], version=int(m["version"]),
                           with_bucket=False)
             .filter((F.col("repo") == repo) & (F.col("path") == path))
             .filter(~F.col("_deleted"))
@@ -1250,19 +1291,13 @@ class LakeTable:
 
             frames.append(
                 dedup_latest_lsn(
-                    spark.read.parquet(*dirty_files),
+                    _read_files(spark, dirty_files),
                     keys=["repo", "path"],
                     order_col="_lsn",
                 ).filter(residual)
             )
-        if kept:
-            frames.append(spark.read.parquet(*kept).filter(residual))
-        if not frames:
-            from tartare_spark.lake.schema import RAW_LAKE_SCHEMA
-
-            frames = [
-                spark.createDataFrame([], RAW_LAKE_SCHEMA).drop("_bucket")
-            ]
+        if kept or not frames:
+            frames.append(_read_files(spark, kept).filter(residual))
         df = frames[0]
         for extra in frames[1:]:
             df = df.unionByName(extra)

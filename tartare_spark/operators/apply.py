@@ -37,6 +37,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tartare_spark.lake.schema import PHYS_LAKE_SCHEMA
 from tartare_spark.lake.table import LakeTable, bucket_expr
 from tartare_spark.operators.dedup import dedup_latest_lsn
 
@@ -196,8 +197,14 @@ def _fence_order_stats(
 
 def _phys_projection(staged: DataFrame) -> DataFrame:
     """Deduped change events → the lake's physical row shape (system
-    columns incl. content sha and tombstone flag), keeping ``_bucket``."""
-    return staged.select(
+    columns incl. content sha and tombstone flag), keeping ``_bucket``.
+
+    Every column is cast to its ``PHYS_LAKE_SCHEMA`` type, because readers
+    pass that schema to every file read: an input column of another type
+    (an all-null column Spark typed as void is written as a parquet
+    BOOLEAN) would otherwise land in a file no read can decode. Casts to
+    the type a column already has are dropped by the optimizer."""
+    phys = staged.select(
         "repo",
         "path",
         "commit",
@@ -207,6 +214,11 @@ def _phys_projection(staged: DataFrame) -> DataFrame:
         (F.col("op") == "delete").alias("_deleted"),
         F.sha2(F.coalesce("content", F.lit("")), 256).alias("_content_sha"),
         F.col("ts").alias("_ts"),
+        "_bucket",
+    )
+    return phys.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name)
+          for f in PHYS_LAKE_SCHEMA.fields],
         "_bucket",
     )
 

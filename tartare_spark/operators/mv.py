@@ -23,9 +23,13 @@ dirty groups per refresh interval are ≪ total groups, collected only
 as a DISTINCT group-key list and broadcast to both the snapshot-side
 semi-join and the MV-side anti-join, so neither the lake nor the MV
 shuffles. The one real job is the re-aggregation of the dirty slice:
-scan (bucket-pruned by the broadcast semi-join's pushed runtime
-filter where the group key prefixes the bucket key) + one partial-agg
-shuffle of already-reduced rows. MV state is versioned
+a scan of the WHOLE snapshot filtered by the broadcast semi-join, then
+one partial-agg shuffle of already-reduced rows. The scan is not
+pruned: lake buckets hash the full ``(repo, path)`` key, so no group
+key (``repo`` included) maps to a bucket subset, and every refresh
+reads every live row. What the refresh saves over a rebuild is the
+aggregation and the MV rewrite of the clean groups, not the read.
+MV state is versioned
 (``v{n}/data.parquet``) so a refresh never overwrites the files it is
 reading — the splice reads v{n-1} while writing v{n}, and crash
 mid-write leaves the current pointer untouched (same manifest-last
@@ -86,6 +90,29 @@ def read_mv(spark: SparkSession, mv_path: str) -> DataFrame:
     return spark.read.parquet(_data_dir(mv_path, meta["mv_version"]))
 
 
+def _write_version(
+    spark: SparkSession, out: DataFrame, mv_path: str, mv_version: int
+) -> DataFrame:
+    """Write ``out`` as MV version ``mv_version`` and return it read back
+    with the schema just written (a read without one launches a
+    schema-inference job)."""
+    path = _data_dir(mv_path, mv_version)
+    out.write.mode("overwrite").parquet(path)
+    return spark.read.schema(out.schema).parquet(path)
+
+
+def _feed_rows(feed: DataFrame) -> int:
+    """Rows in the files ``feed`` reads, from their parquet footers: a
+    driver-side read of a few KB per file, no Spark job."""
+    import pyarrow.parquet as pq
+    from concurrent.futures import ThreadPoolExecutor
+    from urllib.parse import unquote, urlparse
+
+    paths = [unquote(urlparse(u).path) for u in feed.inputFiles()]
+    with ThreadPoolExecutor(max_workers=min(16, max(len(paths), 1))) as ex:
+        return sum(md.num_rows for md in ex.map(pq.read_metadata, paths))
+
+
 def build_mv(
     spark: SparkSession,
     lake: LakeTable,
@@ -97,9 +124,9 @@ def build_mv(
     version = lake.current_version()
     os.makedirs(mv_path, exist_ok=True)
     out = agg(lake.snapshot(spark, version=version), group_col)
-    out.write.mode("overwrite").parquet(_data_dir(mv_path, 0))
+    built = _write_version(spark, out, mv_path, 0)
     _publish(mv_path, 0, version)
-    return read_mv(spark, mv_path)
+    return built
 
 
 def refresh_mv(
@@ -112,8 +139,9 @@ def refresh_mv(
 ) -> DataFrame:
     """Incremental refresh: recompute only the groups touched since the
     MV's recorded lake version. Equivalent to a full rebuild at the new
-    version for ANY ``groupBy(group_col)`` agg (tested), at O(changed
-    slice) cost. A group whose every key was deleted disappears; a
+    version for ANY ``groupBy(group_col)`` agg (tested), aggregating
+    only the changed groups (the snapshot is still read in full, see
+    the module docstring). A group whose every key was deleted disappears; a
     brand-new group appears — both fall out of the splice with no
     special casing.
 
@@ -125,7 +153,14 @@ def refresh_mv(
     the refresh cadence to avoid paying this.
 
     ``dirty_broadcast_threshold`` caps how many dirty groups may ride a
-    broadcast join (see :func:`refresh_plan`)."""
+    broadcast join (see :func:`refresh_plan`).
+
+    Spark jobs: the feed and the previous MV version are read with known
+    schemas, the broadcast guard is usually settled from file footers
+    (no count job), and the returned frame reads the new version with
+    the schema just written — so the only jobs are the dirty-key
+    collect for the broadcast, the write and whatever the caller runs on
+    the result."""
     meta = _read_meta(mv_path)
     from_v, to_v = int(meta["lake_version"]), lake.current_version()
     if from_v == to_v:
@@ -147,9 +182,9 @@ def refresh_mv(
             mv_path, from_v, to_v,
         )
         spliced = agg(lake.snapshot(spark, version=to_v), group_col)
-    spliced.write.mode("overwrite").parquet(_data_dir(mv_path, next_version))
+    refreshed = _write_version(spark, spliced, mv_path, next_version)
     _publish(mv_path, next_version, to_v)
-    return read_mv(spark, mv_path)
+    return refreshed
 
 
 def refresh_plan(
@@ -173,25 +208,35 @@ def refresh_plan(
 
     Broadcast guard: after a bulk backfill or a long refresh gap the
     dirty set can be millions of groups — broadcasting that OOMs the
-    driver/executors. The dirty-group count is one cheap agg over the
-    O(changed-rows) feed (``dirty_count`` lets a caller that already
-    knows it skip the job); past ``dirty_broadcast_threshold`` both
-    joins run as plain shuffle semi/anti joins instead — more exchanges,
-    but bounded memory, and at a near-all-dirty ratio the shuffle is
-    carrying close to a full-rebuild's volume anyway."""
+    driver/executors. Past ``dirty_broadcast_threshold`` dirty groups
+    both joins run as plain shuffle semi/anti joins instead — more
+    exchanges, but bounded memory, and at a near-all-dirty ratio the
+    shuffle is carrying close to a full-rebuild's volume anyway. The
+    guard first tries an upper bound that costs no Spark job: every
+    dirty group comes from at least one feed row, and the feed's row
+    count is the sum of its files' parquet-footer ``num_rows``. That
+    holds for every commit kind, because it counts the files the feed
+    actually reads (a manifest's ``stats.keys`` does not: a
+    fast-forward carries the branch head's stats but publishes every
+    staged delta). Only when the bound is over the threshold does the
+    guard count the distinct dirty groups in one agg over the feed;
+    ``dirty_count`` lets a caller that already knows it skip both."""
     if mv_version is None:
         mv_version = int(_read_meta(mv_path)["mv_version"])
     feed = lake.changes(spark, from_v, to_v)
     dirty = feed.select(group_col).distinct()
+    threshold = int(dirty_broadcast_threshold)
     if dirty_count is None:
-        dirty_count = dirty.count()
-    small = dirty_count <= int(dirty_broadcast_threshold)
+        dirty_count = _feed_rows(feed)  # an upper bound, see above
+        if dirty_count > threshold:
+            dirty_count = dirty.count()
+    small = dirty_count <= threshold
     hint = F.broadcast if small else (lambda df: df)
     if not small:
         logger.warning(
             "MV refresh: %s dirty groups exceed the broadcast threshold "
             "(%s) — using shuffle semi/anti joins for this refresh",
-            dirty_count, dirty_broadcast_threshold,
+            dirty_count, threshold,
         )
     recomputed = agg(
         lake.snapshot(spark, version=to_v).join(
@@ -199,6 +244,10 @@ def refresh_plan(
         ),
         group_col,
     )
-    prev = spark.read.parquet(_data_dir(mv_path, mv_version))
+    # the previous version was written by the same agg: reading it with
+    # the recomputed frame's schema skips a schema-inference job
+    prev = spark.read.schema(recomputed.schema).parquet(
+        _data_dir(mv_path, mv_version)
+    )
     kept = prev.join(hint(dirty), group_col, "left_anti")
     return kept.unionByName(recomputed)

@@ -28,7 +28,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 _SPEC_FILE = "_bucket_spec.json"
@@ -150,6 +150,7 @@ def publish_incremental(
     import shutil
 
     from tartare_spark.lake.table import _atomic_write_json
+    from tartare_spark.operators.apply import _obs_metrics
 
     meta_path = os.path.join(out_dir, _PUB_META)
     part = F.pmod(F.xxhash64("repo", "path"), F.lit(num_parts)).cast("int")
@@ -201,15 +202,23 @@ def publish_incremental(
         )
         return {"mode": "noop", "version": version, "dirty_partitions": 0}
     snap = _snap().filter(F.col("_pub_part").isin(dirty))
-    snap.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("_pub_part").parquet(out_dir)
+    # the partitions that received rows ride the write job as a metric
+    obs = Observation("publish_incremental")
+    snap.observe(obs, F.collect_set("_pub_part").alias("live")).write.mode(
+        "overwrite"
+    ).option("partitionOverwriteMode", "dynamic").partitionBy(
+        "_pub_part"
+    ).parquet(out_dir)
+    live_parts = _obs_metrics(obs).get("live")
+    if live_parts is None:
+        # AQE dropped the metric of an empty write: query instead
+        live_parts = [
+            r[0] for r in snap.select("_pub_part").distinct().collect()
+        ]
     # dynamic overwrite never touches a partition that produced zero
     # rows — a dirty partition whose keys were all tombstoned must be
     # cleared by hand or the export would retain deleted rows forever
-    live = {
-        int(r[0]) for r in snap.select("_pub_part").distinct().collect()
-    }
+    live = {int(p_id) for p_id in live_parts}
     for p_id in dirty:
         if p_id not in live:
             shutil.rmtree(

@@ -14,10 +14,13 @@ Scale shape at 100 TB:
   final sketch is a few KB regardless of input size. No per-key state.
 - **probe**: the sketch is broadcast; estimating any candidate set is a
   broadcast hash join, never a shuffle of the corpus.
-- **candidates**: at scale you probe keys you already suspect (alert
-  lists, per-partition local top-k). The demo probes ALL distinct keys
-  so the DuckDB oracle can also verify the classical CMS guarantee
-  est ≥ exact on every key.
+- **candidates**: ``heavy_hitters`` probes ALL distinct keys, taken
+  from an exact ``groupBy(key)`` that it also reports as ``n_exact``,
+  so the DuckDB oracle can verify the classical CMS guarantee
+  est ≥ exact on every key. That groupBy holds O(distinct keys) state:
+  it is the demo form, not the scale path. No reduced candidate list
+  (alert lists, per-partition local top-k) ships; a caller with one
+  passes it to ``cms_estimate`` directly.
 
 Hashes are md5-derived (``conv(substr(md5(depth|key),1,8),16,10) %
 width``) so DuckDB mirrors them bit-exactly — same trick as the minhash

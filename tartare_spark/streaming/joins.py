@@ -42,7 +42,20 @@ def stream_stream_enrich(
     EVERY marker column comes back prefixed ``mk_`` (``mts`` →
     ``mk_mts``, payload columns likewise; the duplicate ``mk_<key>`` is
     dropped), so a marker stream may share any column names with the
-    event stream — nothing is ambiguous and nothing collides."""
+    event stream — nothing is ambiguous and nothing collides.
+
+    Raises ``ValueError`` naming the column when ``events`` lacks
+    ``ts`` or ``markers`` lacks ``mts`` (their time columns), or when
+    either side lacks ``key``."""
+    for side, df, cols in (
+        ("events", events, ("ts", key)), ("markers", markers, ("mts", key))
+    ):
+        for c in cols:
+            if c not in df.columns:
+                raise ValueError(
+                    f"stream_stream_enrich: {side} has no column {c!r} "
+                    f"(columns: {df.columns})"
+                )
     mk = markers.select(
         *[F.col(c).alias(f"mk_{c}") for c in markers.columns]
     )

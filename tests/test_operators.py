@@ -1530,6 +1530,59 @@ def test_mv_dirty_broadcast_guard(spark, tmp_path):
     assert full.exceptAll(got).count() == 0
 
 
+def test_mv_broadcast_guard_bound_spans_fast_forward(spark, tmp_path):
+    """The broadcast guard's driver-side bound must cover every commit
+    kind. A fast-forward publishes every staged delta but carries only
+    the branch head's stats: here the head touched 1 key while the
+    publish dirties 4 groups, so a threshold of 1 must still plan
+    shuffle joins, and the refresh must equal a full rebuild."""
+    import datetime
+
+    from tartare_spark.lake.schema import CHANGE_EVENT_SCHEMA
+    from tartare_spark.lake.table import LakeTable
+    from tartare_spark.operators.apply import apply_batch
+    from tartare_spark.operators.mv import build_mv, refresh_mv, refresh_plan
+
+    ts = datetime.datetime(2026, 1, 1)
+
+    def events(rows):
+        return spark.createDataFrame(
+            [(i, "update", repo, f"p{i}", f"c{i}", None, "z" * i, ts)
+             for i, repo in rows],
+            CHANGE_EVENT_SCHEMA,
+        )
+
+    lake = LakeTable.create(str(tmp_path / "lake"), num_buckets=4)
+    apply_batch(spark, lake, events([(i, f"r{i % 6}") for i in range(1, 13)]),
+                batch_id=0)
+    mv = str(tmp_path / "mv")
+    build_mv(spark, lake, mv)
+    fork_v = lake.current_version()
+    br = lake.create_branch("stage")
+    # two staged commits: 3 groups, then 1 key in a 4th group
+    apply_batch(spark, br, events([(20, "r0"), (21, "r1"), (22, "r2")]),
+                batch_id=1)
+    apply_batch(spark, br, events([(23, "r9")]), batch_id=2)
+    lake.fast_forward("stage")
+    assert lake.manifest()["stats"]["keys"] == 1  # the head commit's stats
+
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        plan = refresh_plan(
+            spark, lake, mv, fork_v, lake.current_version(),
+            dirty_broadcast_threshold=1,
+        )._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" not in plan, plan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+
+    got = refresh_mv(spark, lake, mv, dirty_broadcast_threshold=1)
+    full = build_mv(spark, lake, str(tmp_path / "mv_full"))
+    assert got.exceptAll(full).count() == 0
+    assert full.exceptAll(got).count() == 0
+
+
 def test_mv_refresh_falls_back_on_expired_feed(spark, tmp_path):
     """ADVICE r4: when expire_snapshots has outrun the MV's recorded
     lake version, the incremental feed is gone — refresh_mv must fall

@@ -498,6 +498,132 @@ def test_read_resolution_pruned_to_dirty_buckets(spark, unit_events, tmp_path):
     assert_state_equals_referee(spark, lake)
 
 
+@pytest.mark.parametrize("num_buckets", [16, 7])
+def test_key_bucket_matches_bucket_expr(spark, num_buckets):
+    """The driver-side lookup bucket is bit-identical to the writer's
+    ``bucket_expr`` on every XXH64 input shape: empty, short, non-ASCII
+    (multi-byte UTF-8), exactly 32 bytes and longer, and null."""
+    import random
+
+    from tartare_spark.lake.table import bucket_expr, key_bucket
+
+    rng = random.Random(20261017)
+    alphabet = "abcXYZ019/._-" + "éßø" + "日本語" + "🙂"
+
+    def word():
+        return "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 70)))
+
+    keys = [(word(), word()) for _ in range(1200)]
+    keys += [("", ""), ("", "x"), ("r" * 32, "p" * 32), ("é" * 16, "🙂" * 8),
+             (None, "p"), ("r", None)]
+    got = [key_bucket(r, p, num_buckets) for r, p in keys]
+    rows = (
+        spark.createDataFrame(
+            [(i, r, p) for i, (r, p) in enumerate(keys)],
+            "i int, repo string, path string",
+        )
+        .select("i", bucket_expr(num_buckets).alias("b"))
+        .collect()
+    )
+    want = [b for _, b in sorted((r["i"], r["b"]) for r in rows)]
+    assert got == want
+    assert any(len(r.encode()) >= 32 for r, _ in keys[:1200])
+
+
+def test_lake_reads_launch_only_data_jobs(spark, tmp_path):
+    """Job-count pin: every lake read launches only the jobs that read
+    data — no schema-inference job per file read, no job to compute a
+    lookup's bucket, no dirty-group count in an MV refresh whose feed
+    is small. An inferring read creeping back shows up here as +1."""
+    import datetime
+
+    from tartare_spark.lake.schema import CHANGE_EVENT_SCHEMA
+    from tartare_spark.lake.table import key_bucket
+    from tartare_spark.operators.mv import build_mv, refresh_mv
+
+    sc = spark.sparkContext
+    ts = datetime.datetime(2026, 1, 1)
+
+    def events(lo, hi):
+        return spark.createDataFrame(
+            [(i, "update", f"r{i % 5}", f"p{i % 40}", f"c{i}", None, "x", ts)
+             for i in range(lo, hi)],
+            CHANGE_EVENT_SCHEMA,
+        )
+
+    lake = LakeTable.create(str(tmp_path / "lake"), num_buckets=4,
+                            compact_every=100)
+    apply_batch(spark, lake, events(1, 41), batch_id=0)
+    lake.compact(spark)
+    mv = str(tmp_path / "mv")
+    build_mv(spark, lake, mv)
+    apply_batch(spark, lake, events(41, 46), batch_id=1)
+    dirty = {int(b) for b, fl in lake.manifest()["deltas"].items() if fl}
+    keys = [(f"r{i % 5}", f"p{i % 40}") for i in range(1, 41)]
+    clean_key = next(k for k in keys if key_bucket(*k, 4) not in dirty)
+    dirty_key = next(k for k in keys if key_bucket(*k, 4) in dirty)
+
+    def jobs(name: str, fn) -> int:
+        group = f"jobpin-{name}"
+        sc.setJobGroup(group, "job-count pin")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    calls = {
+        # a clean bucket is one scan; a dirty one adds the LWW dedup shuffle
+        "lookup_clean": lambda: lake.lookup(spark, *clean_key).collect(),
+        "lookup_dirty": lambda: lake.lookup(spark, *dirty_key).collect(),
+        "changes_count": lambda: lake.changes(spark, 1).count(),
+        "snapshot_count": lambda: lake.snapshot(spark).count(),
+        "scan_where_count":
+            lambda: lake.scan_where(spark, {"_lsn": (3, 30)}).count(),
+        # the dirty-key broadcast (2) and the write (3)
+        "refresh_mv": lambda: refresh_mv(spark, lake, mv),
+    }
+    counts = {name: jobs(name, fn) for name, fn in calls.items()}
+    assert counts == {
+        "lookup_clean": 1, "lookup_dirty": 2, "changes_count": 2,
+        "snapshot_count": 3, "scan_where_count": 3, "refresh_mv": 5,
+    }
+
+
+def test_untyped_null_column_keeps_physical_schema(spark, tmp_path):
+    """A batch built without a schema whose ``lang`` is all None reaches
+    the engine as a void column; the lake still stores ``lang`` as a
+    string, so later typed batches, folds and every read agree on it."""
+    import datetime
+
+    from tartare_spark.fixtures import CHANGE_EVENT_COLUMNS
+    from tartare_spark.lake.schema import CHANGE_EVENT_SCHEMA
+
+    ts = datetime.datetime(2026, 1, 1)
+    untyped = spark.createDataFrame(
+        pd.DataFrame(
+            [(i, "update", "r", f"p{i}", "c", None, "x", ts) for i in (1, 2)],
+            columns=CHANGE_EVENT_COLUMNS,
+        )
+    )
+    assert untyped.schema["lang"].dataType.typeName() == "void"
+    typed = spark.createDataFrame(
+        [(3, "update", "r", "p1", "c", "py", "y", ts)], CHANGE_EVENT_SCHEMA
+    )
+    lake = LakeTable.create(str(tmp_path / "lake"), num_buckets=1)
+    apply_batch(spark, lake, untyped, batch_id=0)
+    apply_batch(spark, lake, typed, batch_id=1)
+    want = {("p1", "py"), ("p2", None)}
+    rows = lake.snapshot(spark).select("path", "lang").collect()
+    assert {tuple(r) for r in rows} == want
+    lake.compact(spark)
+    rows = lake.snapshot(spark).select("path", "lang").collect()
+    assert {tuple(r) for r in rows} == want
+
+
 def test_bloom_filters_on_base_not_deltas(spark, unit_events, tmp_path):
     """Perf contract from round 3: the apply hot path (delta writes)
     skips parquet bloom-filter builds; maintenance (compaction → base

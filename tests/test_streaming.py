@@ -670,6 +670,20 @@ def test_stream_stream_enrich_matches_batch_join(spark, unit_events_dir, tmp_pat
     assert any("symmetricHashJoin" in (op.get("operatorName") or "") for op in ops), ops
 
 
+def test_stream_stream_enrich_names_missing_time_column(spark):
+    """Misuse fails with the contract, not Spark's unresolved-column
+    error: a side without its time column raises ValueError naming it."""
+    from tartare_spark.streaming.joins import stream_stream_enrich
+
+    events = spark.createDataFrame([("r", 1)], "repo string, lsn long")
+    markers = spark.createDataFrame([("r", None)], "repo string, mts timestamp")
+    with pytest.raises(ValueError, match=r"events has no column 'ts'"):
+        stream_stream_enrich(events, markers)
+    events = events.withColumn("ts", F.current_timestamp())
+    with pytest.raises(ValueError, match=r"markers has no column 'mts'"):
+        stream_stream_enrich(events, markers.withColumnRenamed("mts", "at"))
+
+
 def test_multi_table_envelope_and_per_table_registry(
     spark, unit_events_dir, tmp_path
 ):
